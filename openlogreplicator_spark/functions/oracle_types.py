@@ -1,9 +1,9 @@
 """Oracle on-disk type decode kernels.
 
 Byte-level decoders for the value encodings the reference extracts from
-redo vectors, re-expressed as vectorized pandas UDFs (Arrow-batched; the
-per-value Python cost is amortized across the batch — this is the
-designated slow path exactly like the reference's per-column decode loop).
+redo vectors. The binary parse plane (sources/binary_redo.py) calls them
+once per distinct column image — the designated slow path, like the
+reference's per-column decode loop.
 
 Reference semantics mirrored:
 - NUMBER   base-100 mantissa/exponent, negative via complement + 0x66
@@ -36,7 +36,6 @@ import datetime as _dt
 import math
 import struct
 
-import pandas as pd
 
 from openlogreplicator_spark.functions.tz_map import TIMEZONE_MAP, TZ_UNKNOWN
 
@@ -50,7 +49,7 @@ _TZ_KEY_UNKNOWN = 0xFFFE
 assert _TZ_KEY_UNKNOWN not in TIMEZONE_MAP
 
 # ---------------------------------------------------------------------------
-# scalar (pure-Python) kernels — used directly and inside the pandas UDFs
+# scalar (pure-Python) kernels
 # ---------------------------------------------------------------------------
 
 
@@ -375,18 +374,6 @@ def _civil_epoch_seconds(b: bytes) -> int:
         b[3] - 1
     )
     return days * 86400 + tod - _UNIX_BC1970
-
-
-def _days_from_civil(y: int, m: int, d: int) -> int:
-    """Proleptic-Gregorian days since 1970-01-01 (Howard Hinnant's
-    civil_from_days inverse) — pure integers, valid for any year, so
-    BC dates don't hit Python datetime's year-1 floor."""
-    y -= m <= 2
-    era = (y if y >= 0 else y - 399) // 400
-    yoe = y - era * 400
-    doy = (153 * (m + (-3 if m > 2 else 9)) + 2) // 5 + d - 1
-    doe = yoe * 365 + yoe // 4 - yoe // 100 + doy
-    return era * 146097 + doe - 719468
 
 
 def _civil_from_days(z: int) -> tuple:
@@ -1000,57 +987,3 @@ def charset_decode(b: bytes | None, charset: str = "AL32UTF8", mode: str = "defa
         # translation is bit-exact.
         s = s.replace("\u301c", "\uff5e")
     return s
-
-
-# ---------------------------------------------------------------------------
-# vectorized pandas UDF wrappers (Arrow batches of BinaryType columns)
-# ---------------------------------------------------------------------------
-
-
-def _series_udf(fn, ret_type: str):
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf(ret_type)
-    def udf(col: pd.Series) -> pd.Series:
-        return col.map(lambda v: fn(v) if v is not None else None)
-
-    return udf
-
-
-def number_decode_udf():
-    return _series_udf(decode_number, "string")
-
-
-def date_decode_udf():
-    return _series_udf(decode_date, "string")
-
-
-def timestamp_decode_udf():
-    return _series_udf(decode_timestamp, "string")
-
-
-def interval_ym_decode_udf(fmt: str = "string_ym_dash"):
-    return _series_udf(lambda b: decode_interval_ym(b, fmt), "string")
-
-
-def interval_ds_decode_udf(fmt: str = "iso8601_space"):
-    return _series_udf(lambda b: decode_interval_ds(b, fmt), "string")
-
-
-def binary_double_decode_udf():
-    return _series_udf(decode_binary_double, "double")
-
-
-def rowid_udf():
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    @pandas_udf("string")
-    def udf(obj: pd.Series, afn: pd.Series, block: pd.Series, slot: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                rowid_to_text(int(o), int(a), int(b), int(s))
-                for o, a, b, s in zip(obj, afn, block, slot)
-            ]
-        )
-
-    return udf

@@ -20,10 +20,9 @@ Spark shape:
 - table selection (F1) = regex owner/table filter applied to the
   dictionary BEFORE the join, so non-selected tables never shuffle.
 
-At 100 TB the dictionary is tiny relative to the stream: resolution
-broadcasts the dictionary side when it fits (the common case, like the
-reference's in-memory packs) and falls back to the shuffle as-of join
-when someone replicates a million tables.
+As-of resolution is always the union-window :func:`asof_resolve`: one
+shuffle on the key, no range join, and the same plan whether the
+dictionary holds ten tables or a million.
 """
 
 from __future__ import annotations
@@ -142,48 +141,6 @@ def asof_resolve(
     out_cols = [F.col(f"_event.{c}").alias(c) for c in ecols]
     out_cols += [F.col(f"_cur.{c}").alias(c) for c in dcols]
     return resolved.select(*out_cols)
-
-
-def asof_resolve_broadcast(
-    events: DataFrame,
-    dict_versions: DataFrame,
-    event_scn: str = "scn",
-    keys: tuple[str, ...] = ("obj",),
-) -> DataFrame:
-    """Broadcast variant for the common small-dictionary case: equi-join
-    on the key against ALL versions (broadcast, no shuffle on the event
-    stream), keep the greatest scn_from ≤ scn via max_by. Event-side cost
-    is a map-side join + partial agg — zero exchanges of the big side
-    when AQE confirms the dictionary fits the broadcast threshold."""
-    dcols = [c for c in dict_versions.columns if c not in (*keys, "scn_from")]
-    # collapse the dictionary to one scn-sorted version ARRAY per key
-    # and pick per event row with filter + element_at(-1) (greatest
-    # scn_from ≤ scn). The first implementation joined all versions and
-    # re-grouped by every event column, which (a) throws for map-typed
-    # event columns (maps are not groupable — any real CHANGE_EVENT /
-    # REDO_RECORD frame has them) and (b) collapsed duplicate event
-    # rows (r12 review pass). The array pick is per-row, keeps the
-    # event side exchange-free, and costs O(versions-per-key), which is
-    # catalog-scale by this variant's own precondition.
-    versions = dict_versions.groupBy(*keys).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("scn_from").alias("_scn"),
-                    F.struct(*[F.col(c) for c in dcols]).alias("_v"),
-                )
-            )
-        ).alias("_vers")
-    )
-    joined = events.join(F.broadcast(versions), on=list(keys), how="left")
-    picked = F.try_element_at(
-        F.filter("_vers", lambda v: v["_scn"] <= F.col(event_scn)),
-        F.lit(-1),   # try_: NULL when no version ≤ scn (or key unseen)
-    )["_v"]
-    ecols = events.columns
-    return joined.select(
-        *ecols, *[picked[c].alias(c) for c in dcols]
-    )
 
 
 def latest_columns(dict_cols: DataFrame) -> DataFrame:

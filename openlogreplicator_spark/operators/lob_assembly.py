@@ -156,77 +156,6 @@ def chain_page_numbers(chains: DataFrame) -> DataFrame:
     )
 
 
-def chain_page_numbers_doubling(
-    chains: DataFrame, max_iter: int = 25
-) -> DataFrame:
-    """Pointer-doubling variant of :func:`chain_page_numbers` for the
-    degenerate case of a chain too long for one task: every node starts
-    pointing at its predecessor with rank 1 (the head gets rank 0); each
-    round follows the pointer two steps and adds its rank, so after k
-    rounds each pointer spans 2^k links — chains up to 2^max_iter pages
-    resolve in max_iter equi-join shuffles keyed (lob_id, dba)."""
-    pred = chains.select(
-        "lob_id",
-        F.col("next_dba").alias("dba"),
-        F.col("dba").alias("ptr"),
-    )
-    heads = chains.select("lob_id", "dba").subtract(
-        chains.select("lob_id", F.col("next_dba").alias("dba"))
-    )
-    nodes = (
-        chains.select("lob_id", "dba")
-        .union(
-            # a null next_dba is a TAIL LINK, not a node — including it
-            # minted a spurious (lob_id, null, 0) output row (r12
-            # review pass, sibling of the walk_bucket NaN fix)
-            chains.select("lob_id", F.col("next_dba").alias("dba"))
-            .where(F.col("dba").isNotNull())
-        )
-        .distinct()
-        .join(pred, ["lob_id", "dba"], "left")
-        .select(
-            "lob_id",
-            "dba",
-            "ptr",
-            F.when(F.col("ptr").isNull(), 0).otherwise(1).alias("rank"),
-        )
-    )
-    _ = heads  # heads are exactly the ptr-null nodes; kept for clarity
-    prev = None
-    for _i in range(max_iter):
-        nodes = nodes.persist()
-        done = nodes.filter(F.col("ptr").isNotNull()).isEmpty()
-        # the isEmpty() above materialized THIS round — the previous
-        # round's cache is now dead weight; without the unpersist every
-        # invocation pinned up to max_iter full node sets in executor
-        # storage for the application lifetime (r12 review pass)
-        if prev is not None:
-            prev.unpersist()
-        prev = nodes
-        if done:
-            break
-        hop = nodes.select(
-            "lob_id",
-            F.col("dba").alias("ptr"),
-            F.col("ptr").alias("ptr2"),
-            F.col("rank").alias("rank2"),
-        )
-        nodes = (
-            nodes.join(hop, ["lob_id", "ptr"], "left")
-            .select(
-                "lob_id",
-                "dba",
-                F.col("ptr2").alias("ptr"),
-                (F.col("rank") + F.coalesce(F.col("rank2"), F.lit(0))).alias(
-                    "rank"
-                ),
-            )
-        )
-    return nodes.select(
-        "lob_id", "dba", F.col("rank").cast("int").alias("page_no")
-    )
-
-
 def assemble_lobs_indexed(
     chunks: DataFrame, page_map: DataFrame
 ) -> DataFrame:

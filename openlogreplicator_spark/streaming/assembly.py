@@ -147,6 +147,30 @@ def _records_arrow_table(pdf: pd.DataFrame):
     return pa.Table.from_arrays(arrays, names=_REC_COLUMNS)
 
 
+def _align_all_na(frames: list) -> list:
+    """Cast each all-NA column to the one dtype the other frames agree on
+    (e.g. an all-None object ``bdba`` beside a restored buffer's
+    float64), when that dtype holds NA. pd.concat already leaves such
+    columns out of its dtype vote but warns that it will stop doing so;
+    casting first keeps today's result dtypes without the warning."""
+    if len(frames) < 2:
+        return frames
+    for c in frames[0].columns:
+        if len({f[c].dtype for f in frames}) < 2:
+            continue
+        na = [f[c].isna().all() for f in frames]
+        kept = {f[c].dtype for f, is_na in zip(frames, na) if not is_na}
+        if len(kept) != 1:
+            continue
+        (dt,) = kept
+        if dt.kind not in "fcmMO":
+            continue
+        for i, is_na in enumerate(na):
+            if is_na and frames[i][c].dtype != dt:
+                frames[i] = frames[i].assign(**{c: frames[i][c].astype(dt)})
+    return frames
+
+
 def _encode_state(
     leftover: pd.DataFrame, skip_xids: set, max_scn: int | None = None,
     n_buckets: int | None = None,
@@ -331,7 +355,7 @@ def assemble_stateful(
     if not frames:
         yield empty
         return
-    comb = pd.concat(frames, ignore_index=True, copy=False)
+    comb = pd.concat(_align_all_na(frames), ignore_index=True, copy=False)
     # Source contract: records arrive in log order across batches (the
     # reference's reader guarantees the same). The defensive re-sort
     # repairs ordering *within* what we currently hold — null key parts

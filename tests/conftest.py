@@ -45,3 +45,14 @@ def drain(q, timeout: int = 180) -> None:
     finally:
         if q.isActive:
             q.stop()
+
+
+def read_redo_json_stream(spark, path: str, max_files_per_trigger=None):
+    """Streaming source over JSON-lines redo-record files in listing
+    order, one file per trigger when ``max_files_per_trigger=1``."""
+    from openlogreplicator_spark.event_model import REDO_RECORD_SCHEMA
+
+    reader = spark.readStream.schema(REDO_RECORD_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)

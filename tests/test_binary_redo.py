@@ -93,25 +93,30 @@ def test_multiple_lwns_and_positions():
     assert pos[0][0] == 1 and pos[0][1] >= 16
 
 
-def test_multi_vector_record():
-    """5.1 undo + 11.x redo pairing: one record, two vectors — both come
-    out with the record's (scn, subscn, block, offset)."""
+def test_multi_vector_record(monkeypatch):
+    """5.1 undo + 11.x redo pairing: one record, two vectors — the
+    production walk emits both with the record's (scn, subscn, block,
+    offset)."""
     import struct
 
-    from openlogreplicator_spark.sources.binary_redo import (
-        LWN_HEADER,
-        decode_vector,
-    )
+    from openlogreplicator_spark.sources import binary_redo
 
-    rec = _rec(10, "t", "update", obj=1, cols={"A": "new"})
+    rec = _rec(10, "t", "update", obj=1, subscn=3, cols={"A": "new"})
     undo = _rec(10, "t", "overwrite", obj=1, cols={"A": "old"})
     body = encode_record(rec, extra_vectors=[undo])
     size, scn, subscn, n_vec = struct.unpack_from("<IQHH", body, 0)
     assert n_vec == 2 and size == len(body)
-    v1, p = decode_vector(body, 16)
-    v2, p = decode_vector(body, p)
-    assert p == len(body)
-    assert v1["cols"] == {"A": "new"} and v2["cols"] == {"A": "old"}
+    # the file encoder takes one vector per record: route its record
+    # encoder through extra_vectors to lay the two-vector record out
+    monkeypatch.setattr(
+        binary_redo, "encode_record",
+        lambda r, **kw: encode_record(r, extra_vectors=[undo], **kw),
+    )
+    out = parse_redo_bytes(encode_redo_file([rec], 1), "t")
+    assert [r["opcode"] for r in out] == ["update", "overwrite"]
+    assert [r["cols"] for r in out] == [{"A": "new"}, {"A": "old"}]
+    pos = {(r["scn"], r["subscn"], r["block"], r["offset"]) for r in out}
+    assert pos == {(10, 3, out[0]["block"], out[0]["offset"])}
 
 
 def test_corruption_detected():

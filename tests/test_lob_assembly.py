@@ -72,15 +72,11 @@ def test_lob_attach_multiple_lob_columns_per_row(spark):
 
 
 def test_chain_page_numbers_pointer_doubling(spark):
-    """dba chains → page numbers via distributed list ranking: a 9-page
+    """dba chains → page numbers via the per-LOB chain walk: a 9-page
     chain in scrambled order, plus an independent 2-page chain."""
     from openlogreplicator_spark.operators.lob_assembly import (
         LOB_CHAIN_SCHEMA,
         chain_page_numbers,
-    )
-
-    from openlogreplicator_spark.operators.lob_assembly import (
-        chain_page_numbers_doubling,
     )
 
     seq = [31, 7, 90, 2, 55, 11, 68, 4, 23]  # logical page order of dbas
@@ -90,11 +86,10 @@ def test_chain_page_numbers_pointer_doubling(spark):
 
     random.Random(5).shuffle(links)
     chains = spark.createDataFrame(links, LOB_CHAIN_SCHEMA)
-    for impl in (chain_page_numbers, chain_page_numbers_doubling):
-        got = {(r.lob_id, r.dba): r.page_no
-               for r in impl(chains).collect()}
-        assert [got[("LA", d)] for d in seq] == list(range(9))
-        assert got[("LB", 100)] == 0 and got[("LB", 200)] == 1
+    got = {(r.lob_id, r.dba): r.page_no
+           for r in chain_page_numbers(chains).collect()}
+    assert [got[("LA", d)] for d in seq] == list(range(9))
+    assert got[("LB", 100)] == 0 and got[("LB", 200)] == 1
 
 
 def test_assemble_lobs_indexed_orders_by_index(spark):
@@ -186,19 +181,16 @@ def test_chain_walk_null_tail_link_emits_no_phantom_page(spark):
     """r12 review pass: LOB_CHAIN_SCHEMA allows a null-terminated tail
     row (dba=30, next_dba=NULL); pandas floats the NULL to NaN, which
     passed `cur is not None` and appended a phantom NaN-dba page to
-    every chain. Both walk variants must emit exactly the real pages."""
+    every chain. The walk must emit exactly the real pages."""
     from openlogreplicator_spark.operators.lob_assembly import (
         chain_page_numbers,
-        chain_page_numbers_doubling,
     )
 
     chains = spark.createDataFrame(
         [("L1", 10, 20), ("L1", 20, 30), ("L1", 30, None)],
         "lob_id string, dba long, next_dba long",
     )
-    for fn in (chain_page_numbers, chain_page_numbers_doubling):
-        got = sorted(
-            (r.dba, r.page_no) for r in fn(chains).collect()
-        )
-        assert got == [(10, 0), (20, 1), (30, 2)], (fn.__name__, got)
-        assert all(r.dba is not None for r in fn(chains).collect())
+    rows = chain_page_numbers(chains).collect()
+    got = sorted((r.dba, r.page_no) for r in rows)
+    assert got == [(10, 0), (20, 1), (30, 2)], got
+    assert all(r.dba is not None for r in rows)

@@ -222,26 +222,6 @@ def test_charset_utf8_is_cesu8():
     assert charset_decode(s.encode("utf-8"), "AL32UTF8") == s
 
 
-def test_udfs_on_spark(spark):
-    from openlogreplicator_spark.functions.oracle_types import (
-        number_decode_udf,
-        rowid_udf,
-    )
-
-    df = spark.createDataFrame(
-        [(raw, expect) for raw, expect in NUMBER_GOLDENS],
-        "raw binary, expect string",
-    )
-    out = df.select("expect", number_decode_udf()("raw").alias("got")).collect()
-    assert all(r.got == r.expect for r in out)
-
-    rid = spark.createDataFrame(
-        [(8187, 4, 219, 0)], "obj long, afn int, block long, slot int"
-    )
-    row = rid.select(rowid_udf()("obj", "afn", "block", "slot").alias("rid")).collect()[0]
-    assert len(row.rid) == 18
-
-
 class TestCharsetExtra:
     """KO16KSCCS / ZHT16HKSCS31 — the two reference charsets with no
     Python codec, decoded by rule+delta (charset_extra.py; full-table

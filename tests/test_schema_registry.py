@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 from openlogreplicator_spark.metadata.schema_registry import (
     apply_dictionary_txns,
     asof_resolve,
-    asof_resolve_broadcast,
     prune_superseded,
     select_tables,
 )
@@ -49,12 +48,6 @@ EXPECT = {
 
 def test_asof_resolve_window(spark):
     out = asof_resolve(_events(spark), _dict(spark))
-    got = {(r.obj, r.scn): (r.name, r.dropped) for r in out.collect()}
-    assert got == EXPECT
-
-
-def test_asof_resolve_broadcast_equivalent(spark):
-    out = asof_resolve_broadcast(_events(spark), _dict(spark))
     got = {(r.obj, r.scn): (r.name, r.dropped) for r in out.collect()}
     assert got == EXPECT
 
@@ -153,12 +146,10 @@ def test_diff_schemas_compare_to(spark):
     }
 
 
-def test_asof_resolve_broadcast_maps_and_duplicates(spark):
-    """r12 review pass: the broadcast variant re-grouped by EVERY event
-    column, which threw for map-typed columns (not groupable — every
-    real event frame has them) and collapsed duplicate event rows. The
-    version-array pick must resolve a mappy frame and preserve the row
-    MULTISET."""
+def test_asof_resolve_maps_and_duplicates(spark):
+    """Real event frames carry map-typed columns and may hold exact
+    duplicate rows: as-of resolution must resolve a mappy frame,
+    preserve the row MULTISET, and keep an unknown obj unresolved."""
     events = spark.createDataFrame(
         [
             (1, 150, {"A": "x"}),
@@ -168,17 +159,17 @@ def test_asof_resolve_broadcast_maps_and_duplicates(spark):
         ],
         "obj long, scn long, cols map<string,string>",
     )
-    out = asof_resolve_broadcast(events, _dict(spark)).collect()
+    out = asof_resolve(events, _dict(spark)).collect()
     assert len(out) == 4, "duplicate/unresolved rows must be preserved"
     by = sorted(
-        ((r.obj, r.scn, r.name, r.dropped) for r in out),
+        ((r.obj, r.scn, r.name, r.dropped, r.cols) for r in out),
         key=lambda t: (t[0], t[1]),
     )
     assert by == [
-        (1, 5, "T1", False),
-        (1, 150, "T1_RENAMED", False),
-        (1, 150, "T1_RENAMED", False),
-        (9, 100, None, None),
+        (1, 5, "T1", False, {"B": "y"}),
+        (1, 150, "T1_RENAMED", False, {"A": "x"}),
+        (1, 150, "T1_RENAMED", False, {"A": "x"}),
+        (9, 100, None, None, None),
     ]
 
 

@@ -257,11 +257,13 @@ def test_zmq_transport_handshake_confirm_continue(tmp_path):
         # sets confirmed_scn and THEN persists (both under the server
         # lock), but this unlocked read can observe the watermark in
         # the gap before the doc write lands — a loaded box widens
-        # that gap (flaked once in a full-suite run, r13)
+        # that gap (flaked once in a full-suite run, r13). Poll for the
+        # doc's CONTENT: an earlier doc must not end the wait early.
         doc = None
         for _ in range(250):
             doc = read_checkpoint_doc(state_dir, "DBZ")
-            if server.confirmed_scn == 200 and doc is not None:
+            if (server.confirmed_scn == 200 and doc is not None
+                    and int(doc["scn"]) == 200):
                 break
             time.sleep(0.02)
         assert server.confirmed_scn == 200

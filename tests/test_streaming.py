@@ -1,5 +1,5 @@
 """Structured Streaming end-to-end: stateful assembly across micro-batches,
-watermarked windows, exactly-once file sink, metrics listener."""
+watermarked dedup and joins, exactly-once file sink, metrics listener."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from conftest import drain
+from conftest import drain, read_redo_json_stream
 from openlogreplicator_spark.operators.transaction_assembly import (
     assemble_transactions_py,
 )
@@ -20,11 +20,6 @@ from openlogreplicator_spark.streaming.assembly import streaming_assemble
 from openlogreplicator_spark.streaming.pipeline import (
     MetricsListener,
     observed,
-    prepare_kafka_frame,
-    read_events_stream,
-    read_redo_json_stream,
-    windowed_metrics,
-    write_json_sink,
 )
 
 
@@ -84,46 +79,6 @@ def test_streaming_assembly_across_batches(spark, tmp_path):
     assert len(got) > 0
 
 
-def test_watermarked_window_metrics(spark, tmp_path):
-    """Watermarked tumbling windows over a streamed events file equal the
-    batch aggregation (availableNow drains everything, so no late drops)."""
-    rows = [
-        {
-            "event_id": i,
-            "ts": f"2024-01-01T{i % 24:02d}:{i % 60:02d}:00.000Z",
-            "user_id": i % 5,
-            "event_type": ["view", "click"][i % 2],
-            "value": float(i),
-            "props": "{}",
-        }
-        for i in range(200)
-    ]
-    # sentinel far in the future: pushes the watermark past every real
-    # window so append mode flushes them before availableNow terminates
-    rows.append(
-        {"event_id": 9999, "ts": "2024-01-03T00:00:00.000Z", "user_id": 0,
-         "event_type": "flush", "value": 0.0, "props": "{}"}
-    )
-    indir = tmp_path / "events_in"
-    indir.mkdir()
-    _write_jsonl(str(indir / "e.json"), rows)
-
-    stream = read_events_stream(spark, str(indir))
-    q = (
-        windowed_metrics(stream)
-        .writeStream.format("memory")
-        .queryName("win_metrics")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    drain(q)
-    got = spark.sql(
-        "SELECT event_type, SUM(n) AS n FROM win_metrics GROUP BY event_type"
-    ).collect()
-    assert {(r.event_type, r.n) for r in got} == {("view", 100), ("click", 100)}
-
-
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """An at-least-once source re-delivers all of batch 1 inside batch 2;
     dropDuplicatesWithinWatermark emits every event_id exactly once while
@@ -148,7 +103,14 @@ def test_stream_dedup_within_watermark(spark, tmp_path):
     time.sleep(0.05)  # distinct mtimes keep batch order deterministic
     _write_jsonl(str(indir / "b1.json"), batch2)
 
-    stream = read_events_stream(spark, str(indir), max_files_per_trigger=1)
+    stream = (
+        spark.readStream.schema(
+            "event_id bigint, ts timestamp, user_id bigint, "
+            "event_type string, value double, props string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .json(str(indir))
+    )
     deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -220,35 +182,30 @@ def test_stream_stream_interval_join(spark, tmp_path):
 
 
 def test_file_sink_exactly_once_resume(spark, tmp_path):
-    """Re-running with the same checkpoint must not duplicate output
-    (W1/F9: exactly-once resume)."""
-    indir = tmp_path / "in"
+    """W3 file sink through the engine: re-running with the same
+    checkpoint must not duplicate output (W1/F9: exactly-once resume)."""
+    from openlogreplicator_spark.config import EngineConfig
+    from openlogreplicator_spark.sources.binary_redo import write_binary_redo
+    from openlogreplicator_spark.sources.redo_gen import redo_records_df
+    from openlogreplicator_spark.streaming.engine import build_pipeline
+
+    records = generate_redo_records(n_txns=8, seed=5)
+    indir = str(tmp_path / "redo_bin")
+    write_binary_redo(redo_records_df(spark, records), indir, n_files=2)
     outdir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    indir.mkdir()
-    _write_jsonl(
-        str(indir / "a.json"),
-        [
-            {"event_id": i, "ts": "2024-01-01T00:00:00.000Z", "user_id": 1,
-             "event_type": "view", "value": 1.0, "props": "{}"}
-            for i in range(10)
-        ],
-    )
-    stream = read_events_stream(spark, str(indir)).select(
-        "event_id", "event_type"
-    )
-    q = write_json_sink(stream, outdir, ckpt)
-    drain(q)
-    n1 = spark.read.json(outdir).count()
+
+    def run() -> int:
+        drain(build_pipeline(
+            spark, EngineConfig(), indir, checkpoint=ckpt, out_dir=outdir,
+            sink="json", query_name="olr_json_resume",
+        ))
+        return spark.read.json(outdir).count()
+
+    n1 = run()
     # resume with identical input + checkpoint → no new epoch, no dupes
-    q2 = write_json_sink(
-        read_events_stream(spark, str(indir)).select("event_id", "event_type"),
-        outdir,
-        ckpt,
-    )
-    drain(q2)
-    n2 = spark.read.json(outdir).count()
-    assert n1 == 10 and n2 == 10
+    n2 = run()
+    assert n1 > 0 and n2 == n1
 
 
 def test_observe_and_listener_metrics(spark, tmp_path):
@@ -313,18 +270,6 @@ def test_idempotent_sink_under_replay(spark, tmp_path):
     )
     assert idempotent_append(batch2, target) == 1
     assert spark.read.parquet(target).count() == 3
-
-
-def test_kafka_frame_shape(spark):
-    """W2 wiring: (key, value) binary columns, key = tag JSON (B5)."""
-    df = spark.createDataFrame(
-        [("1.2.3", 100, "c")], "xid string, scn bigint, op string"
-    )
-    out = prepare_kafka_frame(df, ("xid",))
-    assert out.schema.simpleString() == "struct<key:binary,value:binary>"
-    row = out.collect()[0]
-    assert json.loads(bytes(row.key).decode()) == {"xid": "1.2.3"}
-    assert json.loads(bytes(row.value).decode())["scn"] == 100
 
 
 class _FakeGroupState:
@@ -906,7 +851,7 @@ def test_transaction_max_mb_zero_means_uncapped(spark, tmp_path):
     Ctx.h:232). Converting it to max_ops=0 made the T4 guard drop every
     transaction whole — a pipeline that runs cleanly and emits nothing
     (r12 review pass)."""
-    from conftest import drain
+    from conftest import drain, read_redo_json_stream
     from openlogreplicator_spark.config import EngineConfig, Format
     from openlogreplicator_spark.sources.binary_redo import (
         write_binary_redo,
